@@ -358,10 +358,7 @@ def _q_lifecycle_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachability."""
     from pfaedle_spark.plans import lifecycle
 
-    nodes_f, edges_f, _ = lifecycle.composed_graph(spark)
-    return graph_ops.connected_components(
-        nodes_f.select("node_id"), edges_f
-    )
+    return lifecycle.composed_components(spark)
 
 
 def _q_collapse_geoms(spark: SparkSession, sf_dir: str) -> DataFrame:

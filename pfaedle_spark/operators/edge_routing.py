@@ -444,19 +444,9 @@ def build_edge_csr(trans_pdf: pd.DataFrame) -> dict:
     # (router.cpp:598-599 — different component => cost inf). Without
     # it, ONE cross-component target in a Viterbi layer makes the A*
     # exhaust the whole reachable graph before concluding "unreachable".
-    parent = np.arange(n, dtype=np.int64)
+    from .graph_ops import union_find_min
 
-    def find(a: int) -> int:
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = int(parent[a])
-        return a
-
-    for a, b in zip(fi.tolist(), ti.tolist()):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            parent[ra] = rb
-    csr["comp"] = np.array([find(i) for i in range(n)], dtype=np.int64)
+    csr["comp"] = union_find_min(n, fi, ti)
     return csr
 
 

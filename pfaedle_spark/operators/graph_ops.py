@@ -10,13 +10,49 @@ min-label propagation with path doubling (label(v) <- min over
 neighbors' labels and label(label(v))), converging in O(log diameter)
 rounds — the alternating-star pattern from the public MapReduce
 connected-components literature. Each round is one shuffle; we
-localCheckpoint every few rounds to truncate lineage.
+localCheckpoint every few rounds to truncate lineage. That loop serves
+the image-scale pair graphs (dedup, phash clusters); a geography-sized
+road graph is labelled in numpy by :func:`min_id_labels`.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def union_find_min(n: int, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Undirected components of the dense ids ``0..n-1`` joined by the
+    pairs ``(u[i], v[i])``: each id's label is the smallest id of its
+    component (every root is its set's minimum, so a union keeps the
+    smaller root)."""
+    comp = np.arange(n, dtype=np.int64)
+
+    def find(i: int) -> int:
+        while comp[i] != i:
+            comp[i] = comp[comp[i]]
+            i = comp[i]
+        return i
+
+    for a, b in zip(u.tolist(), v.tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            comp[max(ra, rb)] = min(ra, rb)
+    return np.array([find(i) for i in range(n)], dtype=np.int64)
+
+
+def min_id_labels(node_id: np.ndarray, src: np.ndarray, dst: np.ndarray) -> np.ndarray:
+    """G7 on flat arrays: the min node id of each node's component, in
+    ``node_id`` order — the fixpoint :func:`connected_components`
+    reaches. Edges with an end outside ``node_id`` join nothing, as in
+    the relational loop, where such an end never holds a label."""
+    ids = np.unique(node_id)
+    ok = np.isin(src, ids) & np.isin(dst, ids)
+    root = union_find_min(
+        len(ids), np.searchsorted(ids, src[ok]), np.searchsorted(ids, dst[ok])
+    )
+    return ids[root][np.searchsorted(ids, node_id)]
 
 
 def degrees(edges: DataFrame) -> DataFrame:

@@ -1,29 +1,47 @@
 """Bounded iterative graph passes (reference trgraph/graph.cpp).
 
+* G2 fix_gaps (``graph.cpp:212-268``): degree-1 node pairs within
+  1 m merge (non-stations) — the higher id is rewritten onto the
+  lowest id in reach.
 * G4 delete_orphan_edges (``graph.cpp:335-363``): exactly 3 rounds of
   dangling-spur removal (degree-1 non-station endpoint) — round count
   mirrors the reference's fixed ``for (int i = 0; i < 3; ++i)``.
-* G2 fix_gaps (``graph.cpp:212-268``): degree-1 node pairs within
-  1 m merge (non-stations) — cell self-join + threshold.
 * G5 collapse_edges (``graph.cpp:105-148``): contract degree-2
   non-station nodes whose two edges are mergeable (same oneway/level),
-  looped to fixpoint with a bounded round count; geometries
-  concatenate (the reference's 4 orientation cases collapse to
-  endpoint bookkeeping here since geoms are endpoint pairs + length).
+  one layer per round until fixpoint or COLLAPSE_MAX_ROUNDS; with
+  polylines, geometries concatenate (the reference's 4 orientation
+  cases collapse to endpoint bookkeeping since geoms are endpoint
+  pairs + length).
 * G6 simplify_geometries (``graph.cpp:149-158``): Douglas-Peucker at
   0.5 m per edge polyline via an Arrow-batched UDF over vertex arrays.
 
-Each round of each pass is one or two joins — no driver-side
-collection; rounds are bounded constants, so lineage stays shallow
-(plus localCheckpoint between collapse rounds).
+G2/G4/G5 are pure numpy functions over flat column arrays
+(:func:`fix_gaps_arrays`, :func:`orphan_keep`, :func:`collapse_arrays`).
+Each repeats the round algebra of its unrolled DuckDB oracle
+(``*_sql``) with the same float expressions, operand order and
+tie-breaks, so the oracles stay bit-exact. The Spark entry points ship
+their inputs into ONE pandas group (:func:`single_group`: a single
+partition fed to one ``mapInPandas`` call) and call them there. The
+road graph is geography-sized and never grows with the image table;
+the router already collects it whole and broadcasts it
+(``routing.edges_broadcast``). As relational loops, every round paid an
+eager ``localCheckpoint`` plus an ``isEmpty`` probe, ~0.5 s of planning,
+codegen and scheduling each, whatever the row count: the cold lifecycle
+spent ~145 of its ~200 Spark jobs there, on 2k edges.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, BooleanType, DataType, IntegralType, StringType, StructField,
+    StructType,
+)
 
 from ..functions.geo import douglas_peucker
 
@@ -32,12 +50,148 @@ COLLAPSE_MAX_ROUNDS = 8
 GAP_DIST = 1.0
 SIMPLIFY_EPS = 0.5
 
+EDGE_COLS = ["edge_id", "src", "dst", "level", "oneway", "length"]
 
-def _endpoint_degrees(edges: DataFrame) -> DataFrame:
-    ends = edges.select(F.col("src").alias("node_id")).unionAll(
-        edges.select(F.col("dst").alias("node_id"))
+# A table on flat arrays: column name -> numpy array, one row per index.
+Table = dict
+
+
+def to_table(pdf: pd.DataFrame) -> Table:
+    return {c: pdf[c].to_numpy() for c in pdf.columns}
+
+
+def take(t: Table, idx) -> Table:
+    return {k: v[idx] for k, v in t.items()}
+
+
+def concat(*ts: Table) -> Table:
+    return {k: np.concatenate([t[k] for t in ts]) for k in ts[0]}
+
+
+def find(keys: np.ndarray, q: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Positions of ``q`` in the sorted unique ``keys``, and whether
+    each is present there."""
+    if not len(keys):
+        return np.zeros(len(q), np.int64), np.zeros(len(q), bool)
+    pos = np.minimum(np.searchsorted(keys, q), len(keys) - 1)
+    return pos, keys[pos] == q
+
+
+def _degrees(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Endpoint degrees (ids, deg); a self-loop counts twice."""
+    return np.unique(np.concatenate([src, dst]), return_counts=True)
+
+
+# --------------------------------------------------------------------
+# one pandas group for a whole (geography-sized) graph
+# --------------------------------------------------------------------
+
+_PART = "_part"
+
+
+def _zero(t: DataType):
+    if isinstance(t, ArrayType):
+        return F.array().cast(t)
+    return F.lit("" if isinstance(t, StringType) else 0).cast(t)
+
+
+def _zeros(t: DataType, n: int):
+    if isinstance(t, ArrayType):
+        return pd.Series([[]] * n, dtype=object)
+    if isinstance(t, StringType):
+        return np.full(n, "", dtype=object)
+    if isinstance(t, BooleanType):
+        return np.zeros(n, bool)
+    return np.zeros(n, np.int64 if isinstance(t, IntegralType) else np.float64)
+
+
+def _union_fields(schemas) -> list[StructField]:
+    fields: dict[str, StructField] = {}
+    for s in schemas:
+        for f in s.fields:
+            fields.setdefault(f.name, f)
+    return list(fields.values())
+
+
+def single_group(
+    frames: dict[str, DataFrame],
+    fn: Callable[[dict[str, pd.DataFrame]], dict[str, pd.DataFrame]],
+    out_schemas: dict[str, StructType | str],
+    eager: bool = False,
+) -> dict[str, DataFrame]:
+    """Run ``fn`` once over all of ``frames`` as ONE group: a single
+    partition fed to one ``mapInPandas`` call.
+
+    ``fn`` gets ``{name: pandas frame of that input's own columns}`` and
+    returns a pandas frame per name of ``out_schemas`` (StructTypes or
+    DDL strings). Inputs and outputs each travel as one tagged union whose missing
+    columns are zero-filled rather than null, so integer columns keep
+    their dtype through Arrow. The returned frames are projections of
+    one result, materialized once when ``eager``."""
+    outs = {
+        n: DataType.fromDDL(s) if isinstance(s, str) else s
+        for n, s in out_schemas.items()
+    }
+    in_fields = _union_fields(df.schema for df in frames.values())
+    out_fields = _union_fields(outs.values())
+    own = {n: df.columns for n, df in frames.items()}
+
+    def run(batches):
+        batches = list(batches)
+        if not batches:  # no rows at all: no group, as in a groupBy
+            return
+        pdf = pd.concat(batches, ignore_index=True)
+        parts = {
+            n: pdf.loc[pdf[_PART] == n, cols].reset_index(drop=True)
+            for n, cols in own.items()
+        }
+        res = fn(parts)
+        for n in outs:
+            r, k = res[n], len(res[n])
+            yield pd.DataFrame(
+                {_PART: np.full(k, n, dtype=object)}
+                | {f.name: (r[f.name].to_numpy() if f.name in r else _zeros(f.dataType, k))
+                   for f in out_fields}
+            )
+
+    union = None
+    for n, df in frames.items():
+        have = set(df.columns)
+        tagged = df.select(
+            F.lit(n).alias(_PART),
+            *[F.col(f.name) if f.name in have else _zero(f.dataType).alias(f.name)
+              for f in in_fields],
+        )
+        union = tagged if union is None else union.union(tagged)
+    # one partition holds the group: no shuffle, one task, one Python call
+    out = union.coalesce(1).mapInPandas(
+        run, StructType([StructField(_PART, StringType())] + out_fields)
     )
-    return ends.groupBy("node_id").agg(F.count("*").cast("long").alias("deg"))
+    if eager:
+        out = out.localCheckpoint(eager=True)
+    return {
+        n: out.filter(F.col(_PART) == n).select(*s.fieldNames())
+        for n, s in outs.items()
+    }
+
+
+# --------------------------------------------------------------------
+# G4 orphan spurs
+# --------------------------------------------------------------------
+
+def orphan_keep(
+    src: np.ndarray, dst: np.ndarray, station_ids: np.ndarray,
+    rounds: int = ORPHAN_ROUNDS,
+) -> np.ndarray:
+    """G4 on flat arrays: the mask of edges that survive ``rounds``
+    rounds of dropping every edge with a degree-1 non-station end."""
+    keep = np.ones(len(src), bool)
+    for _ in range(rounds):
+        s, d = src[keep], dst[keep]
+        ids, deg = _degrees(s, d)
+        hang = ids[(deg == 1) & ~np.isin(ids, station_ids)]
+        keep[keep] = ~(np.isin(s, hang) | np.isin(d, hang))
+    return keep
 
 
 def delete_orphan_edges(
@@ -45,25 +199,18 @@ def delete_orphan_edges(
 ) -> DataFrame:
     """Drop spur edges whose degree-1 endpoint is not a station;
     repeat `rounds` times (reference fixed 3)."""
-    stations = station_node_ids.select(F.col("node_id").alias("st_id"))
-    cur = edges
-    for r in range(rounds):
-        # materialize between rounds: `cur` feeds both the degree agg and
-        # the two anti-joins, so without a cut each round re-embeds the
-        # previous round's DAG ~4x (plan growth is exponential in rounds;
-        # bounded rounds make the per-round materialization cheap)
-        cur = cur.localCheckpoint(eager=True)
-        deg = _endpoint_degrees(cur)
-        hang = (
-            deg.filter(F.col("deg") == 1)
-            .join(stations, deg.node_id == stations.st_id, "left_anti")
-            .select(F.col("node_id").alias("hang_id"))
+
+    def fn(p):
+        keep = orphan_keep(
+            p["edges"]["src"].to_numpy(), p["edges"]["dst"].to_numpy(),
+            p["stations"]["node_id"].to_numpy(), rounds,
         )
-        cur = (
-            cur.join(hang.withColumnRenamed("hang_id", "src"), "src", "left_anti")
-            .join(hang.withColumnRenamed("hang_id", "dst"), "dst", "left_anti")
-        )
-    return cur
+        return {"edges": p["edges"][keep]}
+
+    return single_group(
+        {"edges": edges, "stations": station_node_ids.select("node_id")},
+        fn, {"edges": edges.schema},
+    )["edges"]
 
 
 def delete_orphan_edges_sql(
@@ -91,53 +238,143 @@ e{r + 1} AS MATERIALIZED (
     return sql + f"\nSELECT edge_id, src, dst, level, oneway, length FROM e{rounds}\n"
 
 
+# --------------------------------------------------------------------
+# G2 gap fixing
+# --------------------------------------------------------------------
+
+def fix_gaps_arrays(
+    node_id: np.ndarray, x: np.ndarray, y: np.ndarray, is_station: np.ndarray,
+    src: np.ndarray, dst: np.ndarray, max_dist: float = GAP_DIST,
+) -> tuple[np.ndarray, np.ndarray]:
+    """G2 on flat arrays: returns (src, dst) with every non-station
+    degree-1 node that lies within ``max_dist`` of another one rewritten
+    onto the smallest such id (ids only; one hop, not transitive)."""
+    ids, deg = _degrees(src, dst)
+    d1 = np.isin(node_id, ids[deg == 1]) & ~is_station
+    o = np.argsort(x[d1], kind="stable")
+    nid, nx, ny = node_id[d1][o], x[d1][o], y[d1][o]
+    # x-sorted sweep: every partner within max_dist lies inside the
+    # (generous) 2*max_dist x-window after it
+    n = len(nid)
+    cnt = np.searchsorted(nx, nx + 2 * max_dist, side="right") - np.arange(n) - 1
+    i = np.repeat(np.arange(n), cnt)
+    j = i + 1 + np.arange(len(i)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    close = (
+        (nx[i] - nx[j]) * (nx[i] - nx[j]) + (ny[i] - ny[j]) * (ny[i] - ny[j])
+        <= max_dist * max_dist
+    )
+    a, b = nid[i][close], nid[j][close]
+    to_id, from_id = np.minimum(a, b), np.maximum(a, b)
+    o = np.lexsort((to_id, from_id))
+    from_id, to_id = from_id[o], to_id[o]
+    first = np.ones(len(from_id), bool)
+    first[1:] = from_id[1:] != from_id[:-1]
+    from_id, to_id = from_id[first], to_id[first]
+
+    def remap(col):
+        if not len(from_id):
+            return col
+        pos, hit = find(from_id, col)
+        return np.where(hit, to_id[pos], col)
+
+    return remap(src), remap(dst)
+
+
 def fix_gaps(nodes: DataFrame, edges: DataFrame, max_dist: float = GAP_DIST) -> DataFrame:
     """G2: merge non-station degree-1 nodes within `max_dist`: rewrite
     the higher node id onto the lower in the edge list.
 
-    Returns the edges with remapped endpoints. Cell join on a 1 m-padded
-    bbox finds the pairs without an n^2 scan."""
-    deg = _endpoint_degrees(edges)
-    d1 = (
-        nodes.join(deg, "node_id")
-        .filter((F.col("deg") == 1) & (~F.col("is_station")))
-        .select("node_id", "x", "y")
-    )
-    from . import cells
+    Returns the edges with remapped endpoints."""
 
-    # padded-cell equi-join (the same J5/J6 pattern): the degree-1 set
-    # can be millions of rows on a continental graph, so no crossJoin —
-    # only same/adjacent-cell pairs are ever compared.
-    a = cells.point_cells(d1, max_dist).select(
-        "cell_id",
-        F.col("node_id").alias("na"), F.col("x").alias("xa"), F.col("y").alias("ya"),
-    )
-    b = cells.tile_assign(d1).select(
-        "cell_id",
-        F.col("node_id").alias("nb"), F.col("x").alias("xb"), F.col("y").alias("yb"),
-    )
-    pairs = (
-        a.join(b, "cell_id")
-        .dropDuplicates(["na", "nb"])
-        .filter(
-            (F.col("na") < F.col("nb"))
-            & (
-                (F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-                + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb"))
-                <= max_dist * max_dist
-            )
+    def fn(p):
+        nd, e = p["nodes"], p["edges"].copy()
+        e["src"], e["dst"] = fix_gaps_arrays(
+            nd["node_id"].to_numpy(), nd["x"].to_numpy(), nd["y"].to_numpy(),
+            nd["is_station"].to_numpy(bool), e["src"].to_numpy(), e["dst"].to_numpy(),
+            max_dist,
         )
-        .select(F.col("nb").alias("from_id"), F.col("na").alias("to_id"))
-    )
-    remap = pairs.groupBy("from_id").agg(F.min("to_id").alias("to_id"))
-    e = edges
-    for col in ("src", "dst"):
-        e = (
-            e.join(remap.withColumnRenamed("from_id", col), col, "left")
-            .withColumn(col, F.coalesce("to_id", F.col(col)))
-            .drop("to_id")
+        return {"edges": e}
+
+    return single_group(
+        {"nodes": nodes.select("node_id", "x", "y", "is_station"), "edges": edges},
+        fn, {"edges": edges.schema},
+    )["edges"]
+
+
+# --------------------------------------------------------------------
+# G5 chain collapse
+# --------------------------------------------------------------------
+
+def _joined_polylines(a: np.ndarray, a_flip: np.ndarray, b: np.ndarray, b_flip: np.ndarray):
+    out = np.empty(len(a), dtype=object)
+    for k in range(len(a)):
+        pa = a[k][::-1] if a_flip[k] else a[k]
+        pb = b[k][::-1] if b_flip[k] else b[k]
+        out[k] = np.concatenate([pa, pb[1:]])  # drop the shared via point
+    return out
+
+
+def collapse_arrays(
+    t: Table, station_ids: np.ndarray, rounds: int = COLLAPSE_MAX_ROUNDS
+) -> Table:
+    """G5 on flat arrays (columns ``EDGE_COLS``, plus ``xs``/``ys``
+    polylines oriented src->dst when present).
+
+    Per round: the non-station degree-2 nodes (mids); the two edge ends
+    at each mid, a = smaller edge_id, b = larger; a mid merges iff
+    e1 != e2 (a self-loop), the levels and oneways agree, and a.other !=
+    b.other (parallel edges would make a self-loop); a merging mid waits
+    a round if a merging neighbour has a smaller id (the race guard).
+    The merged edge keeps e1, runs a.other -> b.other, takes a's
+    level/oneway and the length a.length + b.length. Polylines follow
+    the reference's 4 orientation cases (graph.cpp:290-334): side a is
+    reversed iff it starts at mid, side b iff it does not, and b's
+    shared via point is dropped. Stops early at the fixpoint."""
+    geo = "xs" in t
+    for _ in range(rounds):
+        src, dst, eid = t["src"], t["dst"], t["edge_id"]
+        ids, deg = _degrees(src, dst)
+        mids = ids[(deg == 2) & ~np.isin(ids, station_ids)]
+        # incidence: one row per edge end at a mid — exactly two per mid
+        # (both of the same edge for a self-loop, which e1 != e2 rejects)
+        end = np.concatenate([src, dst])
+        row = np.concatenate([np.arange(len(src))] * 2)
+        at = np.isin(end, mids)
+        end, row = end[at], row[at]
+        o = np.lexsort((eid[row], end))
+        mid = end[o][0::2]
+        ra, rb = row[o][0::2], row[o][1::2]
+        a_other = np.where(src[ra] == mid, dst[ra], src[ra])
+        b_other = np.where(src[rb] == mid, dst[rb], src[rb])
+        merg = (
+            (eid[ra] != eid[rb])
+            & (t["level"][ra] == t["level"][rb])
+            & (t["oneway"][ra] == t["oneway"][rb])
+            & (a_other != b_other)
         )
-    return e
+        m_ids = mid[merg]
+        race = (np.isin(a_other, m_ids) & (a_other < mid)) | (
+            np.isin(b_other, m_ids) & (b_other < mid)
+        )
+        safe = merg & ~race
+        if not safe.any():
+            break
+        ra, rb, mid = ra[safe], rb[safe], mid[safe]
+        merged = {
+            "edge_id": eid[ra],
+            "src": a_other[safe],
+            "dst": b_other[safe],
+            "level": t["level"][ra],
+            "oneway": t["oneway"][ra],
+            "length": t["length"][ra] + t["length"][rb],
+        }
+        if geo:
+            a_flip, b_flip = src[ra] == mid, src[rb] != mid
+            for c in ("xs", "ys"):
+                merged[c] = _joined_polylines(t[c][ra], a_flip, t[c][rb], b_flip)
+        dead = np.isin(eid, np.concatenate([eid[ra], eid[rb]]))
+        t = concat(take(t, ~dead), merged)
+    return t
 
 
 def collapse_edges(
@@ -146,114 +383,31 @@ def collapse_edges(
     geoms: DataFrame | None = None,
 ) -> DataFrame:
     """G5: contract chains through degree-2 non-station nodes whose two
-    incident edges agree on (level, oneway). Each round merges one layer
-    of chain nodes; loops until fixpoint or COLLAPSE_MAX_ROUNDS.
-
-    Merged edge: new endpoints are the two outer nodes, length sums,
-    edge_id = min of the pair (deterministic).
+    incident edges agree on (level, oneway); see :func:`collapse_arrays`.
 
     With ``geoms`` (edge_id, xs, ys polylines oriented src->dst), merged
-    edges also CONCATENATE their polylines per the reference's 4
-    orientation cases (graph.cpp:290-334): each side is reversed iff it
-    does not already run toward/away from the contraction node, and the
-    shared via point is dropped from the second side."""
-    stations = station_node_ids.select(F.col("node_id").alias("st_id"))
-    cur = edges.select("edge_id", "src", "dst", "level", "oneway", "length")
-    geo_cols = []
-    if geoms is not None:
-        cur = cur.join(geoms, "edge_id")
-        geo_cols = ["xs", "ys"]
-    for _ in range(COLLAPSE_MAX_ROUNDS):
-        deg = _endpoint_degrees(cur)
-        mid = (
-            deg.filter(F.col("deg") == 2)
-            .join(stations, deg.node_id == stations.st_id, "left_anti")
-            .select(F.col("node_id").alias("mid"))
-        )
-        # the two edges at each contraction node: explode endpoints so
-        # the incident lookup is a hash equi-join on the node id (the
-        # OR-form src==mid|dst==mid would be a nested-loop join — O(E*M)
-        # comparisons, a scale-killer on a continental edge set). A
-        # self-loop at mid yields two exploded rows with e1==e2, which
-        # the e1<>e2 merge guard below discards — same outcome as the
-        # OR-join's single row failing the n==2 guard.
-        inc = (
-            cur.select(
-                "edge_id", "src", "dst", "level", "oneway", "length", *geo_cols,
-                F.explode(F.array("src", "dst")).alias("end_pt"),
-            )
-            .join(mid, F.col("end_pt") == F.col("mid"))
-            .select(
-                "mid", "edge_id", "src", "dst", "level", "oneway", "length", *geo_cols,
-                F.when(F.col("src") == F.col("mid"), F.col("dst"))
-                .otherwise(F.col("src"))
-                .alias("other"),
-            )
-        )
-        pair_fields = ["other", "level", "oneway", "length", "src", *geo_cols]
-        g = inc.groupBy("mid").agg(
-            F.count("*").alias("n"),
-            F.min("edge_id").alias("e1"),
-            F.max("edge_id").alias("e2"),
-            F.min_by(F.struct(*pair_fields), "edge_id").alias("a"),
-            F.max_by(F.struct(*pair_fields), "edge_id").alias("b"),
-        )
-        merg = g.filter(
-            (F.col("n") == 2)
-            & (F.col("e1") != F.col("e2"))
-            & (F.col("a.level") == F.col("b.level"))
-            & (F.col("a.oneway") == F.col("b.oneway"))
-            & (F.col("a.other") != F.col("b.other"))  # no self-loop creation
-        )
-        # one contraction per round per disjoint pair: a chain node whose
-        # neighbor is also being contracted this round could race; keep
-        # only nodes where neither neighbor is a (smaller-id) mid node.
-        safe = (
-            merg.join(
-                merg.select(F.col("mid").alias("n_mid")),
-                (F.col("a.other") == F.col("n_mid")) & (F.col("n_mid") < F.col("mid")),
-                "left_anti",
-            )
-            .join(
-                merg.select(F.col("mid").alias("n_mid2")),
-                (F.col("b.other") == F.col("n_mid2")) & (F.col("n_mid2") < F.col("mid")),
-                "left_anti",
-            )
-        )
-        safe = safe.localCheckpoint(eager=True)  # reused 3x below; also
-        # lets the fixpoint probe short-circuit without re-deriving
-        if safe.isEmpty():
-            break
-        merged_cols = [
-            F.col("e1").alias("edge_id"),
-            F.col("a.other").alias("src"),
-            F.col("b.other").alias("dst"),
-            F.col("a.level").alias("level"),
-            F.col("a.oneway").alias("oneway"),
-            (F.col("a.length") + F.col("b.length")).alias("length"),
-        ]
-        if geoms is not None:
-            # orientation cases: side a must END at mid (reverse if its
-            # stored orientation starts there); side b must START at mid
-            def _or_a(col):
-                return F.when(F.col("a.src") != F.col("mid"), F.col(f"a.{col}"))                     .otherwise(F.reverse(F.col(f"a.{col}")))
+    edges also CONCATENATE their polylines; edges without a polyline
+    are dropped (an inner join on edge_id)."""
+    with_geoms = geoms is not None  # fn must not capture a DataFrame
+    frames = {
+        "edges": edges.select(*EDGE_COLS),
+        "stations": station_node_ids.select("node_id"),
+    }
+    schema = frames["edges"].schema
+    if with_geoms:
+        frames["geoms"] = geoms.select("edge_id", "xs", "ys")
+        schema = StructType(schema.fields + frames["geoms"].schema.fields[1:])
 
-            def _or_b(col):
-                b = F.when(F.col("b.src") == F.col("mid"), F.col(f"b.{col}"))                     .otherwise(F.reverse(F.col(f"b.{col}")))
-                return F.slice(b, 2, F.size(b))  # drop the shared via point
+    def fn(p):
+        t = to_table(p["edges"])
+        if with_geoms:
+            g = p["geoms"].sort_values("edge_id")
+            pos, hit = find(g["edge_id"].to_numpy(), t["edge_id"])
+            t = take(t, hit) | {c: g[c].to_numpy()[pos[hit]] for c in ("xs", "ys")}
+        out = collapse_arrays(t, p["stations"]["node_id"].to_numpy())
+        return {"edges": pd.DataFrame(out)}
 
-            merged_cols += [
-                F.concat(_or_a("xs"), _or_b("xs")).alias("xs"),
-                F.concat(_or_a("ys"), _or_b("ys")).alias("ys"),
-            ]
-        merged_edges = safe.select(*merged_cols)
-        dead = safe.select(F.explode(F.array("e1", "e2")).alias("edge_id"))
-        cur = (
-            cur.join(dead, "edge_id", "left_anti")
-            .unionByName(merged_edges)
-            .localCheckpoint(eager=True)
-        )
-    return cur
+    return single_group(frames, fn, {"edges": schema})["edges"]
 
 
 def simplify_geometries(edge_geoms: DataFrame, eps: float = SIMPLIFY_EPS) -> DataFrame:

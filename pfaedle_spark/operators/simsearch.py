@@ -327,13 +327,23 @@ def _srp_keys_np():
     from pyspark.sql.functions import pandas_udf
 
     def srp_keys(qv):
-        if len(qv) == 0:
-            return pd.Series([], dtype=object)
-        m = np.vstack([np.asarray(v, dtype=np.int64) for v in qv])
-        bits = (m @ _srp_weights().T >= 0).astype(np.int64)  # (n, SRP_BITS)
-        pw = np.int64(1) << np.arange(BAND_W, dtype=np.int64)
-        keys = bits.reshape(-1, SRP_BANDS, BAND_W) @ pw      # (n, SRP_BANDS)
-        return pd.Series(list(keys))
+        # a null vector, a null component or a wrong width has no key:
+        # it gets a null one instead of failing the stage (or, for a
+        # null component, silently casting NaN to an int64)
+        ok = [
+            v is not None and len(v) == EMB_DIM and not pd.isna(v).any()
+            for v in qv
+        ]
+        out = [None] * len(qv)
+        good = [i for i, g in enumerate(ok) if g]
+        if good:
+            m = np.vstack([np.asarray(qv.iloc[i], dtype=np.int64) for i in good])
+            bits = (m @ _srp_weights().T >= 0).astype(np.int64)  # (n, SRP_BITS)
+            pw = np.int64(1) << np.arange(BAND_W, dtype=np.int64)
+            keys = bits.reshape(-1, SRP_BANDS, BAND_W) @ pw      # (n, SRP_BANDS)
+            for i, k in zip(good, keys):
+                out[i] = k
+        return pd.Series(out, dtype=object)
 
     # annotations set as OBJECTS (not strings): this module's
     # `from __future__ import annotations` would stringify inline hints

@@ -7,19 +7,34 @@ runs both names through the order-sensitive regex normalizer chain
 (``trgraph/normalizer.cpp:50-96``) and then ``statSimi``
 (``include/pfaedle/router/comp.h:18-60``: exact => 1).
 
-Spark plan: same cell-id equi-join as J5, names normalized with chained
-``regexp_replace`` columns (JVM-side), exact-match similarity, then
-``row_number`` argmin with (dist, node_id) tie-break. No UDFs.
+Spark plan (J6): same cell-id equi-join as J5, names normalized with
+chained ``regexp_replace`` columns (JVM-side), exact-match similarity,
+then ``row_number`` argmin with (dist, node_id) tie-break. No UDFs.
+
+J7 (snap with edge splitting) is a graph pass: :func:`snap_split_arrays`
+runs its escalating-radius rounds in numpy over flat arrays, inside the
+one pandas group that holds the whole graph
+(``graph_passes.single_group``), with the float expressions of its
+round-unrolled DuckDB oracle. As relational rounds, each paid an eager
+``localCheckpoint`` and two window shuffles for ~2k edges. The snap set
+is a few hundred stops and the graph is geography-sized, so the
+stop x edge pairs are enumerated directly (bbox-prefiltered, in stop
+chunks) instead of through a cell join.
 """
 
 from __future__ import annotations
 
+import re
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import constants as C
 from .. import sqlgen
 from . import cells
+from .graph_passes import Table, concat, single_group, take, to_table
 
 # Order-sensitive normalizer chain (reference normalizer.cpp semantics,
 # rules modeled on pfaedle.cfg:8-215): lowercase, strip punctuation,
@@ -97,8 +112,8 @@ def snap_stations(
 # the projection and insert a new station node. Driver loop
 # ``snap_stations`` (:1649-1785) escalates the search radius
 # (pfaedle.cfg:354). The reference mutates the grid in place; here each
-# round is an immutable DataFrame generation: round k consumes round
-# k-1's edge set, split edges are tombstoned (anti-join) and their two
+# round is an immutable generation of the flat edge arrays: round k
+# consumes round k-1's edge set, split edges are dropped and their two
 # halves appended (SURVEY §7 risk 2 / Stage 3 design).
 
 SPLIT_RADII = [25.0, 100.0, 200.0]
@@ -108,8 +123,8 @@ SPLIT_EDGE_OFF = 4_000_000  # split-half edge ids: OFF + stopnum*2 (+1)
 
 _STOPNUM = "CAST(REGEXP_EXTRACT(stop_id, '([0-9]+)', 1) AS BIGINT)"
 
-# projection onto the best edge — ONE dialect-neutral derivation used by
-# Spark (F.expr) and DuckDB so every value is bit-identical
+# projection onto the best edge, as the DuckDB oracle computes it;
+# project_arrays repeats it operand for operand, so values are bit-identical
 _DX, _DY = "(x2 - x1)", "(y2 - y1)"
 _LEN2 = f"({_DX}*{_DX} + {_DY}*{_DY})"
 _T_RAW = f"(((x - x1)*{_DX} + (y - y1)*{_DY}) / {_LEN2})"
@@ -130,6 +145,135 @@ _NODE_ID = (
 )
 
 
+SPLIT_EDGE_COLS = [
+    "edge_id", "src", "dst", "x1", "y1", "x2", "y2", "level", "oneway", "length"
+]
+SNAPS_SCHEMA = (
+    "stop_id string, node_id long, kind string, round int, dist double, "
+    "qx double, qy double, split_edge long"
+)
+
+
+def stop_numbers(stop_id: np.ndarray) -> np.ndarray:
+    """``_STOPNUM`` on flat arrays: the first digit run of each stop id."""
+    out = np.empty(len(stop_id), np.int64)
+    for k, s in enumerate(stop_id):
+        m = re.search(r"[0-9]+", s)
+        if m is None:
+            raise ValueError(f"stop id {s!r} carries no stop number")
+        out[k] = int(m.group(0))
+    return out
+
+
+def project_arrays(px, py, x1, y1, x2, y2):
+    """``_T``/``_QX``/``_QY`` and ``sqlgen.dist_to_segment`` on flat
+    arrays, operand for operand: returns (t, qx, qy, dist)."""
+    dx, dy = x2 - x1, y2 - y1
+    len2 = dx * dx + dy * dy
+    with np.errstate(divide="ignore", invalid="ignore"):
+        t_raw = ((px - x1) * dx + (py - y1) * dy) / len2
+    t = np.where(len2 <= 0, 0.0, np.minimum(1.0, np.maximum(0.0, t_raw)))
+    qx, qy = x1 + t * dx, y1 + t * dy
+    return t, qx, qy, np.sqrt((px - qx) * (px - qx) + (py - qy) * (py - qy))
+
+
+def _pairs_within(px, py, e, r: float) -> tuple[np.ndarray, np.ndarray]:
+    """(stop, edge) index pairs whose bboxes come within ``r`` (+1 m of
+    slack) — a superset of the pairs within ``r``; stop chunks bound
+    the mask at ~4M cells."""
+    lox, hix = np.minimum(e["x1"], e["x2"]) - r - 1.0, np.maximum(e["x1"], e["x2"]) + r + 1.0
+    loy, hiy = np.minimum(e["y1"], e["y2"]) - r - 1.0, np.maximum(e["y1"], e["y2"]) + r + 1.0
+    step = max(1, (1 << 22) // max(len(lox), 1))
+    si, ei = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    for c in range(0, len(px), step):
+        cx, cy = px[c:c + step, None], py[c:c + step, None]
+        i, j = np.nonzero((cx >= lox) & (cx <= hix) & (cy >= loy) & (cy <= hiy))
+        si.append(i + c)
+        ei.append(j)
+    return np.concatenate(si), np.concatenate(ei)
+
+
+def _first_per(key: np.ndarray, *order: np.ndarray) -> np.ndarray:
+    """Index of the first row per ``key`` under the ascending ``order``
+    keys (the ``row_number() = 1`` of a window)."""
+    o = np.lexsort(tuple(reversed(order)) + (key,))
+    first = np.ones(len(o), bool)
+    first[1:] = key[o][1:] != key[o][:-1]
+    return o[first]
+
+
+def snap_split_arrays(
+    stops: Table, edges: Table, radii: list[float] | None = None,
+    eps: float = SPLIT_EPS,
+) -> tuple[Table, Table]:
+    """J7 on flat arrays: ``stops`` (stop_id, x, y), ``edges``
+    (``SPLIT_EDGE_COLS``) -> (snaps as in ``SNAPS_SCHEMA``, post-split
+    edges).
+
+    Per round: every (stop, edge) pair within the radius; the best edge
+    per stop (argmin dist, edge_id); ONE winner stop per edge (argmin
+    dist, stop_id — the race-safe stand-in for the reference's
+    sequential in-place mutation; losers retry next round against the
+    updated edge set); endpoint promotion within ``eps``, else a split
+    into ``t * length`` and ``(1.0 - t) * length`` halves."""
+    radii = radii or SPLIT_RADII
+    sid = np.asarray(stops["stop_id"], dtype=object)
+    # stop_id order as Spark sorts strings (code point = UTF-8 byte order)
+    srank = np.empty(len(sid), np.int64)
+    srank[np.argsort(sid.astype(str), kind="stable")] = np.arange(len(sid))
+    snum, sx, sy = stop_numbers(sid), stops["x"], stops["y"]
+    live = np.arange(len(sid))
+    e = {c: edges[c] for c in SPLIT_EDGE_COLS}
+    parts = []
+    for rnd, r in enumerate(radii, start=1):
+        si, ei = _pairs_within(sx[live], sy[live], e, r)
+        si = live[si]
+        t, qx, qy, dist = project_arrays(
+            sx[si], sy[si], e["x1"][ei], e["y1"][ei], e["x2"][ei], e["y2"][ei]
+        )
+        ok = dist <= r
+        si, ei, t, qx, qy, dist = si[ok], ei[ok], t[ok], qx[ok], qy[ok], dist[ok]
+        b = _first_per(si, dist, e["edge_id"][ei])
+        w = b[_first_per(e["edge_id"][ei[b]], dist[b], srank[si[b]])]
+        si, ei, t, qx, qy, dist = si[w], ei[w], t[w], qx[w], qy[w], dist[w]
+        length = e["length"][ei]
+        dpos = t * length
+        at_src, at_dst = dpos <= eps, length - dpos <= eps
+        split = ~at_src & ~at_dst
+        node = np.where(
+            at_src, e["src"][ei],
+            np.where(at_dst, e["dst"][ei], PROJ_NODE_OFF + snum[si]),
+        )
+        parts.append({
+            "stop_id": sid[si],
+            "node_id": node,
+            "kind": np.where(at_src, "src", np.where(at_dst, "dst", "split")).astype(object),
+            "round": np.full(len(si), rnd, np.int32),
+            "dist": dist,
+            "qx": qx,
+            "qy": qy,
+            "split_edge": e["edge_id"][ei],
+        })
+        k, n, ts, sqx, sqy = ei[split], node[split], t[split], qx[split], qy[split]
+        half_id = SPLIT_EDGE_OFF + snum[si[split]] * 2
+        carry = {"level": e["level"][k], "oneway": e["oneway"][k]}
+        half1 = {
+            "edge_id": half_id, "src": e["src"][k], "dst": n,
+            "x1": e["x1"][k], "y1": e["y1"][k], "x2": sqx, "y2": sqy,
+            **carry, "length": ts * e["length"][k],
+        }
+        half2 = {
+            "edge_id": half_id + 1, "src": n, "dst": e["dst"][k],
+            "x1": sqx, "y1": sqy, "x2": e["x2"][k], "y2": e["y2"][k],
+            **carry, "length": (1.0 - ts) * e["length"][k],
+        }
+        keep = np.ones(len(e["edge_id"]), bool)
+        keep[k] = False
+        e = concat(take(e, keep), half1, half2)
+        live = live[~np.isin(live, si)]
+    return concat(*parts), e
+
+
 def snap_with_splits(
     stops: DataFrame,
     edges: DataFrame,
@@ -137,92 +281,31 @@ def snap_with_splits(
     eps: float = SPLIT_EPS,
     return_edges: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Escalating-radius snap with edge splitting.
+    """Escalating-radius snap with edge splitting
+    (:func:`snap_split_arrays`, in one pandas group).
 
-    Per round: cell join (stops x current edges) -> best edge per stop
-    (argmin dist, edge_id) -> ONE winner stop per edge (argmin dist,
-    stop_id — the race-safe stand-in for the reference's sequential
-    in-place mutation; losers retry next round against the updated edge
-    set) -> endpoint promotion within `eps`, else split.
-
-    Output: (stop_id, node_id, kind, round, dist, qx, qy, split_edge).
+    Output: (stop_id, node_id, kind, round, dist, qx, qy, split_edge);
+    with ``return_edges`` also the post-split edge set, and the one
+    kernel run behind both is materialized once.
     """
-    from . import candidates as cand_ops
+    e_in = edges.select(*SPLIT_EDGE_COLS)
 
-    radii = radii or SPLIT_RADII
-    cur_edges = edges.select(
-        "edge_id", "src", "dst", "x1", "y1", "x2", "y2", "level", "oneway", "length"
+    def fn(p):
+        snaps, e = snap_split_arrays(
+            to_table(p["stops"]), to_table(p["edges"]), radii, eps
+        )
+        return {"snaps": pd.DataFrame(snaps), "edges": pd.DataFrame(e)}
+
+    out = single_group(
+        {"stops": stops.select("stop_id", "x", "y"), "edges": e_in},
+        fn, {"snaps": SNAPS_SCHEMA, "edges": e_in.schema}, eager=return_edges,
     )
-    unsnapped = stops.select(
-        "stop_id", F.expr(_STOPNUM).alias("stopnum"), "x", "y"
-    )
-    parts = []
-    for rnd, r in enumerate(radii, start=1):
-        pc = cells.point_cells(unsnapped, r)
-        ec = cells.edge_cells(cur_edges)
-        j = pc.join(ec, "cell_id").dropDuplicates(["stop_id", "edge_id"])
-        j = j.withColumn("dist", F.expr(cand_ops.DIST_EXPR)).filter(F.col("dist") <= r)
-        w_stop = Window.partitionBy("stop_id").orderBy(
-            F.col("dist").asc(), F.col("edge_id").asc()
-        )
-        best = j.withColumn("rk", F.row_number().over(w_stop)).filter("rk = 1")
-        w_edge = Window.partitionBy("edge_id").orderBy(
-            F.col("dist").asc(), F.col("stop_id").asc()
-        )
-        winner = best.withColumn("ek", F.row_number().over(w_edge)).filter("ek = 1")
-        snapped = winner.select(
-            "stop_id", "stopnum", "dist", "edge_id", "src", "dst",
-            "x1", "y1", "x2", "y2", "level", "oneway", "length",
-            F.expr(_T).alias("t"),
-            F.expr(_QX).alias("qx"),
-            F.expr(_QY).alias("qy"),
-            F.expr(_KIND.format(eps=eps)).alias("kind"),
-            F.expr(_NODE_ID.format(eps=eps)).alias("node_id"),
-            F.lit(rnd).alias("round"),
-        ).localCheckpoint(eager=True)
-        parts.append(
-            snapped.select(
-                "stop_id", "node_id", "kind", "round", "dist", "qx", "qy",
-                F.col("edge_id").alias("split_edge"),
-            )
-        )
-        splits = snapped.filter("kind = 'split'")
-        half1 = splits.select(
-            (F.lit(SPLIT_EDGE_OFF) + F.col("stopnum") * 2).alias("edge_id"),
-            "src",
-            F.col("node_id").alias("dst"),
-            "x1", "y1",
-            F.col("qx").alias("x2"), F.col("qy").alias("y2"),
-            "level", "oneway",
-            (F.col("t") * F.col("length")).alias("length"),
-        )
-        half2 = splits.select(
-            (F.lit(SPLIT_EDGE_OFF) + F.col("stopnum") * 2 + 1).alias("edge_id"),
-            F.col("node_id").alias("src"),
-            "dst",
-            F.col("qx").alias("x1"), F.col("qy").alias("y1"),
-            "x2", "y2",
-            "level", "oneway",
-            ((F.lit(1.0) - F.col("t")) * F.col("length")).alias("length"),
-        )
-        cur_edges = (
-            cur_edges.join(splits.select("edge_id"), "edge_id", "left_anti")
-            .unionByName(half1)
-            .unionByName(half2)
-            .localCheckpoint(eager=True)  # truncate per-round lineage
-        )
-        unsnapped = unsnapped.join(
-            snapped.select("stop_id"), "stop_id", "left_anti"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
     if return_edges:
         # the post-split edge set — the composed lifecycle feeds it to
         # collapse/routing so split edges become routing states (the
         # reference's in-place graph mutation, osm_builder.cpp:1363-1506)
-        return out, cur_edges
-    return out
+        return out["snaps"], out["edges"]
+    return out["snaps"]
 
 
 def _cell_join_sql(stop_src: str, edge_src: str, radius: float) -> str:

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from .. import constants as C
 from .. import sqlgen
 from ..functions.geo import point_in_polygon
-from . import cells
+from . import cells, graph_ops
 
 GROUP_ATTR_MOD = 23        # synthetic uic_ref value: node_id % 23
 GROUP_MAX_DIST = 6500.0    # merge radius (reference: uic 500 m at city scale)
@@ -63,33 +63,12 @@ def station_groups(station_nodes: DataFrame) -> DataFrame:
         ids = pdf["node_id"].to_numpy()
         xs = pdf["x"].to_numpy()
         ys = pdf["y"].to_numpy()
-        n = len(ids)
-        parent = np.arange(n)
-
-        def find(i: int) -> int:
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
         dx = xs[:, None] - xs[None, :]
         dy = ys[:, None] - ys[None, :]
         close = (dx * dx + dy * dy) <= GROUP_MAX_DIST * GROUP_MAX_DIST
-        for i in range(n):
-            for j in range(i + 1, n):
-                if close[i, j]:
-                    ri, rj = find(i), find(j)
-                    if ri != rj:
-                        parent[max(ri, rj)] = min(ri, rj)
-        # representative: min node_id in each component (ids ascend with
-        # index order only per-partition, so reduce explicitly)
-        root = np.array([find(i) for i in range(n)])
-        rep = {}
-        for i in range(n):
-            r = root[i]
-            rep[r] = min(rep.get(r, ids[i]), ids[i])
+        i, j = np.nonzero(np.triu(close, 1))
         out = pdf[["node_id", "attr_val"]].copy()
-        out["group_rep"] = [rep[root[i]] for i in range(n)]
+        out["group_rep"] = graph_ops.min_id_labels(ids, ids[i], ids[j])
         return out
 
     return with_attr.groupBy("attr_val").applyInPandas(

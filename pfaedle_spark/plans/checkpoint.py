@@ -19,7 +19,9 @@ and what a 1000-executor job needs: partition-grained restartability
 and an audit trail of row counts per stage.
 
 Scale notes: the manifest is one small driver-side JSON file per run;
-per-partition stats come from parquet footers (no extra Spark job).
+per-partition stats come from parquet footers (no extra Spark job), and
+a stage's parquet is read back with the schema the manifest records
+(inferring it is a Spark job per read).
 Stages write with ``maxRecordsPerFile``-bounded files so partition
 metrics stay meaningful at any input size.
 """
@@ -32,6 +34,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CheckpointedPipeline:
@@ -100,7 +103,7 @@ class CheckpointedPipeline:
             and inputs_fresh
         ):
             self.skipped.append(name)
-            return self.spark.read.parquet(path)
+            return self._read(path, entry)
 
         t0 = time.perf_counter()
         df = fn()
@@ -117,11 +120,18 @@ class CheckpointedPipeline:
                 "n_rows": sum(p["rows"] for p in parts),
                 "inputs": inputs or [],
                 "partitions": parts,
+                "schema": df.schema.jsonValue(),
                 "ts": time.time(),
             }
         )
         self.computed.append(name)
-        return self.spark.read.parquet(path)
+        return self._read(path, self._entries[name])
+
+    def _read(self, path: str, entry: dict) -> DataFrame:
+        reader = self.spark.read
+        if "schema" in entry:  # manifests written before it was recorded infer it
+            reader = reader.schema(StructType.fromJson(entry["schema"]))
+        return reader.parquet(path)
 
     def effect_stage(
         self,

@@ -9,117 +9,145 @@ re-expressed as one chained Spark plan:
 
 Two surfaces:
 
-* :func:`composed_graph` — the relational prefix (through collapse),
-  lazily composed; the ``lifecycle_graph`` driver query runs it against
-  the round-unrolled DuckDB oracle in :func:`lifecycle_graph_sql`
-  (fix-gaps remap + snap rounds + orphan/collapse rounds, every value
-  bit-checkable).
+* :func:`composed_graph` — the graph prefix (through collapse, plus the
+  component labels of :func:`composed_components`); the
+  ``lifecycle_graph`` query runs it against the round-unrolled
+  DuckDB oracle in :func:`lifecycle_graph_sql` (fix-gaps remap + snap
+  rounds + orphan/collapse rounds, every value bit-checkable).
 * :func:`checkpointed_lifecycle` — the whole chain through the DP tail
   and the GTFS shapes sink, checkpointed per stage (kill + re-run
   resumes from the last durable stage; see tests/test_checkpoint.py).
 
-Scale notes: every stage is the already-scaled operator (cell joins,
-bounded unrolled rounds with per-round localCheckpoint, broadcast
-graph-metadata sides); composition adds no new shuffle — each stage
-reads the previous stage's parquet partition-parallel.
+Scale notes: the graph prefix (G2 -> J7 -> G4 -> G5 -> G7) is ONE
+pandas group holding nodes, edges and stations: one partition fed to
+one ``mapInPandas`` call (a groupBy on a constant would only add a
+shuffle and a job). It runs the numpy passes of ``graph_passes``,
+``snap`` and ``graph_ops`` back to back (:func:`composed_arrays`), and
+one eager ``localCheckpoint`` materializes the result; the ``snaps``,
+``graph_nodes``, ``graph_edges`` and ``components`` stages are
+projections of it. A single group is the right trade for a
+geography-sized graph: it does not grow with the image table, and the
+router already collects it whole and broadcasts it. As relational
+round loops the same passes cost ~145 Spark jobs (an eager checkpoint
+and an ``isEmpty`` probe per round, each paying planning, codegen and
+scheduling) for ~2k edges; now they cost one. The observation stages
+(candidates onwards) are the scaled operators; each reads the previous
+stage's parquet partition-parallel.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import datagen, sqlgen
 from ..operators import graph_ops, graph_passes, snap
+from ..operators.graph_passes import Table, find, take, to_table
 from .checkpoint import CheckpointedPipeline
 
 
-_COMPOSED_MEMO: dict[str, tuple[DataFrame, DataFrame, DataFrame]] = {}
+GRAPH_SCHEMAS = {
+    "nodes": "node_id long, x double, y double, is_station boolean",
+    "edges": (
+        "edge_id long, src long, dst long, x1 double, y1 double, x2 double, "
+        "y2 double, level int, oneway boolean, length double"
+    ),
+    "snaps": snap.SNAPS_SCHEMA,
+    "components": "node_id long, label long",
+}
+
+_COMPOSED_MEMO: dict[str, dict[str, DataFrame]] = {}
+
+
+def composed_arrays(nodes: Table, edges: Table, stations: Table) -> dict[str, Table]:
+    """The graph prefix on flat arrays: fix_gaps -> snap with splits ->
+    orphan prune -> collapse -> min-id components, with the node/edge
+    bookkeeping between them. Every snapped node is a station node from
+    the snap on (the reference attaches the stop to the node,
+    osm_builder.cpp:1363-1506); split projections are NEW station nodes
+    at (qx, qy); the final edges re-acquire endpoint coordinates."""
+    src, dst = graph_passes.fix_gaps_arrays(
+        nodes["node_id"], nodes["x"], nodes["y"], nodes["is_station"],
+        edges["src"], edges["dst"],
+    )
+    snaps, e = snap.snap_split_arrays(stations, edges | {"src": src, "dst": dst})
+    split = snaps["kind"] == "split"
+    nodes_f = {
+        "node_id": np.concatenate([nodes["node_id"], snaps["node_id"][split]]),
+        "x": np.concatenate([nodes["x"], snaps["qx"][split]]),
+        "y": np.concatenate([nodes["y"], snaps["qy"][split]]),
+        "is_station": np.concatenate([
+            nodes["is_station"] | np.isin(nodes["node_id"], snaps["node_id"]),
+            np.ones(split.sum(), bool),
+        ]),
+    }
+    st = nodes_f["node_id"][nodes_f["is_station"]]
+    e = take(e, graph_passes.orphan_keep(e["src"], e["dst"], st))
+    c = graph_passes.collapse_arrays({k: e[k] for k in graph_passes.EDGE_COLS}, st)
+    # endpoint coordinates: an inner join on each end
+    o = np.argsort(nodes_f["node_id"], kind="stable")
+    s_pos, s_ok = find(nodes_f["node_id"][o], c["src"])
+    d_pos, d_ok = find(nodes_f["node_id"][o], c["dst"])
+    ok = s_ok & d_ok
+    c, si, di = take(c, ok), o[s_pos[ok]], o[d_pos[ok]]
+    edges_f = {
+        "edge_id": c["edge_id"], "src": c["src"], "dst": c["dst"],
+        "x1": nodes_f["x"][si], "y1": nodes_f["y"][si],
+        "x2": nodes_f["x"][di], "y2": nodes_f["y"][di],
+        "level": c["level"], "oneway": c["oneway"], "length": c["length"],
+    }
+    labels = graph_ops.min_id_labels(nodes_f["node_id"], c["src"], c["dst"])
+    return {
+        "nodes": nodes_f,
+        "edges": edges_f,
+        "snaps": snaps,
+        "components": {"node_id": nodes_f["node_id"], "label": labels},
+    }
+
+
+def _composed(spark: SparkSession) -> dict[str, DataFrame]:
+    """The prefix as one materialized single-group stage, memoized per
+    session: three entry queries and the checkpointed run read it in
+    one session, and the memo dies with the context (keyed on
+    applicationId + startTime)."""
+    from ..operators.routing import session_token
+
+    tok = session_token(spark)
+    hit = _COMPOSED_MEMO.get(tok)
+    if hit is None:
+        def fn(p):
+            out = composed_arrays(
+                to_table(p["nodes"]), to_table(p["edges"]), to_table(p["stations"])
+            )
+            return {n: pd.DataFrame(t) for n, t in out.items()}
+
+        hit = _COMPOSED_MEMO[tok] = graph_passes.single_group(
+            {
+                "nodes": datagen.nodes(spark).select("node_id", "x", "y", "is_station"),
+                "edges": datagen.edges(spark),
+                "stations": datagen.stations(spark).select("stop_id", "x", "y"),
+            },
+            fn, GRAPH_SCHEMAS, eager=True,
+        )
+    return hit
 
 
 def composed_graph(
     spark: SparkSession,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """fix_gaps -> snap_with_splits -> orphan prune -> collapse, with
-    node/edge bookkeeping: snapped nodes become station nodes, split
-    projection nodes join the node table, final edges re-acquire
-    endpoint coordinates. Returns (final_nodes, final_edges, snaps).
+    """fix_gaps -> snap_with_splits -> orphan prune -> collapse (see
+    :func:`composed_arrays`). Returns (final_nodes, final_edges, snaps),
+    projections of one materialized result."""
+    g = _composed(spark)
+    return g["nodes"], g["edges"], g["snaps"]
 
-    Memoized per session (same rationale as
-    ``edge_routing.build_variant_transitions``): the prefix is a
-    deterministic function of the static graph, and three consumers
-    run it in one session (``lifecycle_graph``, ``lifecycle_candidates``,
-    the checkpointed run) — re-paying the multi-round snap/collapse
-    loops per invocation is pure waste. The returned frames end at
-    eager localCheckpoints, so reuse is a metadata read; the memo dies
-    with the context (keyed on applicationId + startTime)."""
-    from ..operators.routing import session_token
 
-    tok = session_token(spark)
-    hit = _COMPOSED_MEMO.get(tok)
-    if hit is not None:
-        return hit
-    nd = datagen.nodes(spark)
-    e0 = datagen.edges(spark)
-    # cut the remap-join lineage before the snap loop: each of the 3
-    # snap rounds (and later every orphan/collapse round) would re-run
-    # the fix_gaps joins otherwise
-    e1 = graph_passes.fix_gaps(nd, e0).localCheckpoint(eager=True)
-    snaps, e2 = snap.snap_with_splits(
-        datagen.stations(spark), e1, return_edges=True
-    )
-    # every snapped node is a station node from here on (the reference
-    # attaches the stop to the node, osm_builder.cpp:1363-1506); split
-    # projections are NEW nodes at (qx, qy)
-    snapped = snaps.select("node_id").distinct().withColumn("snapped", F.lit(True))
-    base_nodes = (
-        nd.select("node_id", "x", "y", "is_station")
-        .join(snapped, "node_id", "left")
-        .select(
-            "node_id", "x", "y",
-            (F.col("is_station") | F.coalesce(F.col("snapped"), F.lit(False)))
-            .alias("is_station"),
-        )
-    )
-    split_nodes = snaps.filter("kind = 'split'").select(
-        "node_id",
-        F.col("qx").alias("x"),
-        F.col("qy").alias("y"),
-        F.lit(True).alias("is_station"),
-    )
-    # nodes_f feeds every orphan/collapse round's station anti-join plus
-    # the final coordinate re-join — one materialization, many readers
-    nodes_f = base_nodes.unionByName(split_nodes).localCheckpoint(eager=True)
-    st_ids = nodes_f.filter("is_station").select("node_id")
-    pruned = graph_passes.delete_orphan_edges(e2, st_ids)
-    collapsed = graph_passes.collapse_edges(pruned, st_ids)
-    edges_f = (
-        collapsed.join(
-            nodes_f.select(
-                F.col("node_id").alias("src"),
-                F.col("x").alias("x1"),
-                F.col("y").alias("y1"),
-            ),
-            "src",
-        )
-        .join(
-            nodes_f.select(
-                F.col("node_id").alias("dst"),
-                F.col("x").alias("x2"),
-                F.col("y").alias("y2"),
-            ),
-            "dst",
-        )
-        .select(
-            "edge_id", "src", "dst", "x1", "y1", "x2", "y2",
-            "level", "oneway", "length",
-        )
-        # cut the coordinate-re-join lineage too: every memo reader
-        # (candidate join, router, sink) starts from materialized edges
-        .localCheckpoint(eager=True)
-    )
-    _COMPOSED_MEMO[tok] = (nodes_f, edges_f, snaps)
-    return _COMPOSED_MEMO[tok]
+def composed_components(spark: SparkSession) -> DataFrame:
+    """(node_id, label): the min node id of each final node's component
+    in the composed graph — the labels the router's ∞-gate consults."""
+    return _composed(spark)["components"]
 
 
 def lifecycle_graph_sql(final_select: bool = True) -> str:
@@ -201,23 +229,17 @@ def checkpointed_lifecycle(
 
     cp = CheckpointedPipeline(spark, root)
 
-    nodes_f_l, edges_f_l, snaps_l = None, None, None
-
-    def _graph():
-        nonlocal nodes_f_l, edges_f_l, snaps_l
-        if edges_f_l is None:
-            nodes_f_l, edges_f_l, snaps_l = composed_graph(spark)
-        return nodes_f_l, edges_f_l, snaps_l
-
-    # the three graph outputs share one composition; _graph() is only
-    # invoked when a stage actually recomputes, so a fully-checkpointed
-    # resume never re-runs the (eager, multi-round) snap loop
-    snaps = cp.stage("snaps", lambda: _graph()[2], inputs=["stations", "edges"])
-    nodes_f = cp.stage("graph_nodes", lambda: _graph()[0], inputs=["snaps"])
-    edges_f = cp.stage("graph_edges", lambda: _graph()[1], inputs=["snaps"])
+    # the four graph outputs are projections of one memoized kernel run,
+    # only invoked when a stage actually recomputes, so a fully
+    # checkpointed resume never runs it
+    snaps = cp.stage(
+        "snaps", lambda: composed_graph(spark)[2], inputs=["stations", "edges"]
+    )
+    nodes_f = cp.stage("graph_nodes", lambda: composed_graph(spark)[0], inputs=["snaps"])
+    edges_f = cp.stage("graph_edges", lambda: composed_graph(spark)[1], inputs=["snaps"])
     comps = cp.stage(
         "components",
-        lambda: graph_ops.connected_components(nodes_f, edges_f),
+        lambda: composed_components(spark),
         inputs=["graph_nodes", "graph_edges"],
     )
     cand = cp.stage(
