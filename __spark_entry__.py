@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pfaedle_spark import constants as C
 from pfaedle_spark import datagen, sqlgen
 from pfaedle_spark.functions import strings, textstats
+from pfaedle_spark.memo import session_memo
 from pfaedle_spark.operators import (
     candidates,
     cells,
@@ -557,10 +558,7 @@ def _q_greedy2_align(spark: SparkSession, sf_dir: str) -> DataFrame:
     return routing.greedy2_align(cand, graph_ops.write_odir_edges(eds))
 
 
-_ALIGNED_MEMO: dict[tuple[str, str], DataFrame] = {}
-_GRID_CAND_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _grid_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized main-grid J5 candidate join (eager
     localCheckpoint), shared by the DP consumers (viterbi_full,
@@ -568,53 +566,21 @@ def _grid_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
     each otherwise re-runs the identical cell join. candidates_knn and
     greedy_assign deliberately do NOT use it: their graded rows and
     plan assertions cover the live join itself."""
-    from pfaedle_spark.operators.routing import session_token
-
-    key = (session_token(spark), sf_dir)
-    hit = _GRID_CAND_MEMO.get(key)
-    if hit is not None:
-        return hit
-    cand = candidates.candidate_edges(
+    return candidates.candidate_edges(
         datagen.points(spark, sf_dir), datagen.edges(spark)
     ).localCheckpoint(eager=True)
-    if len(_GRID_CAND_MEMO) > 4:
-        # unpersist evicted checkpoint blocks (they'd otherwise stay
-        # pinned in executor storage until context shutdown)
-        for old in _GRID_CAND_MEMO.values():
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _GRID_CAND_MEMO.clear()
-    _GRID_CAND_MEMO[key] = cand
-    return cand
 
 
+@session_memo
 def _viterbi_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The R7 node-state alignment shared by viterbi_align and the four
     eval consumers (frechet_eval, df_histogram, segmentize,
     eval_summary). Deterministic per (session, sf_dir); memoized behind
     an eager localCheckpoint so the candidates -> alignment DP runs
     once per session instead of once per query."""
-    from pfaedle_spark.operators.routing import session_token
-
-    key = (session_token(spark), sf_dir)
-    hit = _ALIGNED_MEMO.get(key)
-    if hit is not None:
-        return hit
-    eds = datagen.edges(spark)
-    aligned = routing.viterbi_align(
-        _grid_cand(spark, sf_dir), graph_ops.write_odir_edges(eds)
+    return routing.viterbi_align(
+        _grid_cand(spark, sf_dir), graph_ops.write_odir_edges(datagen.edges(spark))
     ).localCheckpoint(eager=True)
-    if len(_ALIGNED_MEMO) > 4:
-        for old in _ALIGNED_MEMO.values():
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _ALIGNED_MEMO.clear()
-    _ALIGNED_MEMO[key] = aligned
-    return aligned
 
 
 def _aligned_xy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,27 +670,17 @@ def _q_frechet_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _frechet_hops_df(spark, sf_dir)
 
 
-_HOPS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_memo
 def _frechet_hops_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-hop Eiter/Mannila DP rows shared by frechet_hops,
     eval_hops_summary and df_histogram_hops — memoized per (session,
     sf_dir) behind an eager localCheckpoint like ``_viterbi_aligned``."""
-    from pfaedle_spark.operators.routing import session_token
-
-    key = (session_token(spark), sf_dir)
-    hit = _HOPS_MEMO.get(key)
-    if hit is not None:
-        return hit
     stops = datagen.fh_stops(spark, sf_dir).select(
         "trip_id", "stop_seq", "x", "y"
     )
-    out = evalmetrics.frechet_hops(
+    return evalmetrics.frechet_hops(
         datagen.fh_aligned(spark, sf_dir), stops
     ).localCheckpoint(eager=True)
-    _HOPS_MEMO[key] = out
-    return out
 
 
 def _q_acc_frechet_hops(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -87,13 +87,17 @@ def main() -> None:
 
     # composed §3.1 lifecycle (graph build -> snap/splits -> collapse ->
     # components -> candidates -> full Viterbi -> shapes -> GTFS sink),
-    # cold (fresh checkpoint root, so every stage computes + persists)
+    # cold: a fresh checkpoint root, so every stage computes + persists,
+    # and the session memos the lifecycle_* queries above filled are
+    # cleared, so the graph prefix and transitions are rebuilt too
     import shutil
     import tempfile
 
+    from pfaedle_spark import memo
     from pfaedle_spark.plans.lifecycle import checkpointed_lifecycle
 
     lc_root = tempfile.mkdtemp(prefix="bench_lifecycle_")
+    memo.clear(spark)
     t0 = time.perf_counter()
     checkpointed_lifecycle(spark, sf_dir, lc_root)  # stages materialize inside
     lifecycle_wall = time.perf_counter() - t0

@@ -307,7 +307,9 @@ def acc_frechet_dist(ax, ay, bx, by, seg: float = 25.0) -> float:
     return float(ca[p - 1, q - 1] / max(p, q))
 
 
-_DP_CHUNK = 32  # bound the padded DP cube: 2 cubes x 32 x 256 x 256 x 8B ~ 34 MB
+# cells of one padded (batch, P, Q) DP cube: 32 pairs at the densify cap,
+# so the two cubes stay within 2 x 8 B x 32 x 256 x 256 ~ 34 MB
+_DP_CELLS = 32 * MAX_DENSIFY_PTS * MAX_DENSIFY_PTS
 
 
 def frechet_dists_batch(paths) -> tuple[np.ndarray, np.ndarray]:
@@ -325,26 +327,46 @@ def frechet_dists_batch(paths) -> tuple[np.ndarray, np.ndarray]:
     rows use ``np.{maximum,add}.accumulate`` (strictly sequential, the
     scalar loop's order), and padded cells only ever CONSUME real
     cells — each pair's answer cell never reads padding. Batches are
-    chunked to ``_DP_CHUNK`` so memory stays bounded however many pairs
-    a caller groups together.
+    chunked by ``_dp_chunks`` so memory stays bounded however many
+    pairs a caller groups together and however long their raw
+    polylines are (densify keeps every raw vertex).
 
     ``paths``: iterable of raw (ax, ay, bx, by) float64 arrays
     (pre-densify). Returns (d_f, acc_d_f) arrays aligned with input.
     """
-    paths = list(paths)
+    paths = [tuple(np.asarray(a, np.float64) for a in p) for p in paths]
     df_out = np.empty(len(paths))
     adf_out = np.empty(len(paths))
-    for lo in range(0, len(paths), _DP_CHUNK):
-        chunk = paths[lo:lo + _DP_CHUNK]
-        for acc, seg0, out in ((False, 50.0, df_out), (True, 25.0, adf_out)):
-            dens = []
-            for ax, ay, bx, by in chunk:
-                ax = np.asarray(ax, np.float64); ay = np.asarray(ay, np.float64)
-                bx = np.asarray(bx, np.float64); by = np.asarray(by, np.float64)
-                seg = max(_eff_seg(ax, ay, seg0), _eff_seg(bx, by, seg0))
-                dens.append(densify(ax, ay, seg) + densify(bx, by, seg))
-            out[lo:lo + len(chunk)] = _frechet_dp_wavefront(dens, acc)
+    for acc, seg0, out in ((False, 50.0, df_out), (True, 25.0, adf_out)):
+        dens = _densified(paths, seg0)
+        for lo, hi in _dp_chunks(dens):
+            out[lo:hi] = _frechet_dp_wavefront(dens[lo:hi], acc)
     return df_out, adf_out
+
+
+def _densified(paths, seg0: float) -> list:
+    """Each raw pair densified at the pair's common step (the scalar
+    kernels' ``seg``)."""
+    out = []
+    for ax, ay, bx, by in paths:
+        seg = max(_eff_seg(ax, ay, seg0), _eff_seg(bx, by, seg0))
+        out.append(densify(ax, ay, seg) + densify(bx, by, seg))
+    return out
+
+
+def _dp_chunks(dens):
+    """(lo, hi) runs of consecutive densified pairs whose padded cube
+    (hi - lo) x P_max x Q_max holds at most ``_DP_CELLS`` cells; a pair
+    larger than that on its own gets a chunk to itself."""
+    lo = p = q = 0
+    for i, (ax, _, bx, _) in enumerate(dens):
+        p2, q2 = max(p, len(ax)), max(q, len(bx))
+        if i > lo and (i + 1 - lo) * p2 * q2 > _DP_CELLS:
+            yield lo, i
+            lo, p2, q2 = i, len(ax), len(bx)
+        p, q = p2, q2
+    if lo < len(dens):
+        yield lo, len(dens)
 
 
 def _frechet_dp_wavefront(dens, acc: bool) -> np.ndarray:

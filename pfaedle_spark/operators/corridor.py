@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import datagen
+from ..memo import session_memo
 from . import candidates, edge_routing
 from .edge_routing import (
     OPTS,
@@ -53,36 +54,23 @@ from .. import constants as C
 BF_ROUNDS = C.COR_EDGES + 10
 
 
-_CAND_MEMO: dict = {}
+@session_memo
+def _corridor_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Session-memoized J5 candidate join of the corridor world (eager
+    localCheckpoint): shapes_corridor, viterbi_corridor and
+    trip_debug_corridor would otherwise each re-run the cell join."""
+    return candidates.candidate_edges(
+        datagen.corridor_points(spark, sf_dir), datagen.corridor_edges(spark)
+    ).localCheckpoint(eager=True)
 
 
 def _corridor_inputs(spark: SparkSession, sf_dir: str):
-    """Session-memoized shared prefix of the three corridor queries:
-    the J5 candidate join (eager localCheckpoint — shapes_corridor,
-    viterbi_corridor and trip_debug_corridor would otherwise each
-    re-run the cell join) plus the transition tables (already memoized
-    per (session, plan) inside build_variant_transitions)."""
-    from .routing import session_token
-
+    """The shared prefix of the three corridor queries: the edges, the
+    memoized candidate join and the (memoized) transition tables."""
     eds = datagen.corridor_edges(spark)
+    cand = _corridor_cand(spark, sf_dir)
     nds = datagen.corridor_nodes(spark)
-    key = (session_token(spark), sf_dir)
-    cand = _CAND_MEMO.get(key)
-    if cand is None:
-        if len(_CAND_MEMO) > 4:
-            # release evicted checkpoint blocks, don't just drop the refs
-            for old in _CAND_MEMO.values():
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-            _CAND_MEMO.clear()
-        cand = candidates.candidate_edges(
-            datagen.corridor_points(spark, sf_dir), eds
-        ).localCheckpoint(eager=True)
-        _CAND_MEMO[key] = cand
-    tbv = edge_routing.build_variant_transitions(spark, eds, nodes=nds)
-    return eds, cand, tbv
+    return eds, cand, edge_routing.build_variant_transitions(spark, eds, nodes=nds)
 
 
 def shapes_corridor(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 
 from .. import sqlgen
 from ..functions import strings
+from ..memo import session_memo
 from . import gtfs_ops
 
 # --- config weights (pfaedle.cfg:377-419 semantics; field names mirror
@@ -1428,27 +1429,16 @@ def _viterbi_full_one(
     )
 
 
-_DEDGES_PDF_CACHE: dict = {}
-
-
+@session_memo
 def directed_full_pdf(spark: SparkSession, edges: DataFrame) -> pd.DataFrame:
     """Driver-side memo of the directed-edge collect (graph-sized,
     static across queries) — same Amdahl argument as
     routing.edges_broadcast: re-collecting per invocation is serial
     driver time that does not shrink with cluster size."""
-    from .routing import session_token
-
-    key = (session_token(spark), edges.semanticHash())
-    if key not in _DEDGES_PDF_CACHE:
-        if len(_DEDGES_PDF_CACHE) > 4:
-            _DEDGES_PDF_CACHE.clear()
-        _DEDGES_PDF_CACHE[key] = directed_full(edges).toPandas()
-    return _DEDGES_PDF_CACHE[key]
+    return directed_full(edges).toPandas()
 
 
-_VARIANT_TRANS_CACHE: dict = {}
-
-
+@session_memo
 def build_variant_transitions(
     spark: SparkSession, edges: DataFrame, nodes: DataFrame | None = None
 ) -> dict[int, pd.DataFrame]:
@@ -1463,24 +1453,13 @@ def build_variant_transitions(
     the standalone queries, so the key carries the plan hash."""
     from .. import datagen
 
-    from .routing import session_token
-
-    key = (
-        session_token(spark),
-        edges.semanticHash(),
-        nodes.semanticHash() if nodes is not None else None,
-    )
-    if key not in _VARIANT_TRANS_CACHE:
-        restr = gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, edges))
-        if nodes is None:
-            nodes = datagen.nodes(spark)
-        if len(_VARIANT_TRANS_CACHE) > 4:
-            _VARIANT_TRANS_CACHE.clear()
-        _VARIANT_TRANS_CACHE[key] = tag_transitions({
-            v: pdf.drop(columns="__variant__").reset_index(drop=True)
-            for v, pdf in _all_variant_transitions(edges, restr, nodes)
-        })
-    return _VARIANT_TRANS_CACHE[key]
+    restr = gtfs_ops.read_restrictions(gtfs_ops.restriction_members(spark, edges))
+    if nodes is None:
+        nodes = datagen.nodes(spark)
+    return tag_transitions({
+        v: pdf.drop(columns="__variant__").reset_index(drop=True)
+        for v, pdf in _all_variant_transitions(edges, restr, nodes)
+    })
 
 
 def _all_variant_transitions(edges, restr, nodes):

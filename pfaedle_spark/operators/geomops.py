@@ -20,7 +20,7 @@ aggregates, altNames station similarity, self edges.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import sqlgen
@@ -481,15 +481,11 @@ def box_overlaps(points: DataFrame) -> DataFrame:
         F.col("xmax_pad") - F.col("xmin_pad"),
         F.col("ymax_pad") - F.col("ymin_pad"),
     )
-    native = F.least(
-        F.greatest(F.ceil(F.log2(span / F.lit(float(C.CELL)))).cast("int"), F.lit(0)),
-        F.lit(n_levels - 1),
-    )
     # memberships: native-level cells plus coarsened cells at every
     # coarser level (<= 2 cells per axis at any m >= k, <= 4L rows/box)
     size_m = F.lit(float(C.CELL)) * F.pow(F.lit(2.0), F.col("m").cast("double"))
     mem = (
-        ext.withColumn("k", native)
+        ext.withColumn("k", native_level(span, n_levels))
         .withColumn("m", F.explode(F.sequence(F.col("k"), F.lit(n_levels - 1))))
         .withColumn(
             "_ix",
@@ -546,6 +542,21 @@ def box_overlaps(points: DataFrame) -> DataFrame:
         ).alias("overlap_area"),
     )
     return pairs.filter(F.col("overlap_area") > 0)
+
+
+def native_level(span: Column, n_levels: int) -> Column:
+    """The finest hierarchical-grid level whose cell covers a box of
+    extent ``span``, clamped to [0, n_levels - 1]; a zero-span
+    (single-point, unpadded) box is level 0."""
+    from .. import constants as C
+
+    return F.when(
+        span > 0,
+        F.least(
+            F.greatest(F.ceil(F.log2(span / F.lit(float(C.CELL)))).cast("int"), F.lit(0)),
+            F.lit(n_levels - 1),
+        ),
+    ).otherwise(F.lit(0))
 
 
 def box_overlaps_sql() -> str:

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import datagen, sqlgen
+from ..memo import session_memo
 from ..operators import graph_ops, graph_passes, snap
 from ..operators.graph_passes import Table, find, take, to_table
 from .checkpoint import CheckpointedPipeline
@@ -57,8 +58,6 @@ GRAPH_SCHEMAS = {
     "snaps": snap.SNAPS_SCHEMA,
     "components": "node_id long, label long",
 }
-
-_COMPOSED_MEMO: dict[str, dict[str, DataFrame]] = {}
 
 
 def composed_arrays(nodes: Table, edges: Table, stations: Table) -> dict[str, Table]:
@@ -107,31 +106,29 @@ def composed_arrays(nodes: Table, edges: Table, stations: Table) -> dict[str, Ta
     }
 
 
+@session_memo
 def _composed(spark: SparkSession) -> dict[str, DataFrame]:
     """The prefix as one materialized single-group stage, memoized per
     session: three entry queries and the checkpointed run read it in
-    one session, and the memo dies with the context (keyed on
-    applicationId + startTime)."""
-    from ..operators.routing import session_token
-
-    tok = session_token(spark)
-    hit = _COMPOSED_MEMO.get(tok)
-    if hit is None:
-        def fn(p):
-            out = composed_arrays(
-                to_table(p["nodes"]), to_table(p["edges"]), to_table(p["stations"])
-            )
-            return {n: pd.DataFrame(t) for n, t in out.items()}
-
-        hit = _COMPOSED_MEMO[tok] = graph_passes.single_group(
-            {
-                "nodes": datagen.nodes(spark).select("node_id", "x", "y", "is_station"),
-                "edges": datagen.edges(spark),
-                "stations": datagen.stations(spark).select("stop_id", "x", "y"),
-            },
-            fn, GRAPH_SCHEMAS, eager=True,
+    one session."""
+    def fn(p):
+        out = composed_arrays(
+            to_table(p["nodes"]), to_table(p["edges"]), to_table(p["stations"])
         )
-    return hit
+        return {n: pd.DataFrame(t) for n, t in out.items()}
+
+    return graph_passes.single_group(
+        {
+            "nodes": datagen.nodes(spark).select("node_id", "x", "y", "is_station"),
+            "edges": datagen.edges(spark),
+            "stations": datagen.stations(spark).select("stop_id", "x", "y"),
+        },
+        fn, GRAPH_SCHEMAS, eager=True,
+    )
+
+
+# the composed memo's handle; clearing it makes the next prefix cold
+_COMPOSED_MEMO = _composed
 
 
 def composed_graph(

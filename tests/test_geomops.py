@@ -154,8 +154,36 @@ def test_hull_prefilter_keeps_hull_and_prunes(spark):
 
 def test_box_overlaps_matches_oracle(spark):
     from conftest import SF_DIR
+    from pyspark.sql import functions as F
+
+    from pfaedle_spark import datagen
+    from pfaedle_spark.operators import geomops
 
     assert_matches_oracle(
         entrymod.queries()["box_overlaps"](spark, SF_DIR),
         entrymod.oracle_sql()["box_overlaps"],
     )
+    # a single-point trip on one of the world's points: its box sits at
+    # grid level 0 and keeps every overlap the all-pairs definition gives
+    pts = datagen.points(spark, SF_DIR).select("trip_id", "x", "y")
+    x0, y0 = pts.orderBy("trip_id", "x", "y").first()[1:]
+    pts = pts.unionByName(spark.createDataFrame([("trip_point", x0, y0)], pts.schema))
+    span = F.greatest(F.col("xmax_pad") - F.col("xmin_pad"), F.col("ymax_pad") - F.col("ymin_pad"))
+    ext = geomops.trip_extent(pts).withColumn("k", geomops.native_level(span, 8))
+    ext = ext.toPandas().set_index("trip_id")
+    assert ext.loc["trip_point", "k"] == 0
+    assert spark.range(1).select(geomops.native_level(F.lit(0.0), 8)).first()[0] == 0
+    me = ext.loc["trip_point"]
+    want = {}
+    for t, o in ext.drop(index="trip_point").iterrows():
+        area = max(min(me.xmax_pad, o.xmax_pad) - max(me.xmin_pad, o.xmin_pad), 0.0) * max(
+            min(me.ymax_pad, o.ymax_pad) - max(me.ymin_pad, o.ymin_pad), 0.0
+        )
+        if area > 0:
+            want[tuple(sorted((t, "trip_point")))] = area
+    got = {
+        (r.a_trip, r.b_trip): r.overlap_area
+        for r in geomops.box_overlaps(pts).collect()
+        if "trip_point" in (r.a_trip, r.b_trip)
+    }
+    assert want and got == want

@@ -11,7 +11,7 @@ column-expression SQL mirrors, and they run in milliseconds.
 import math
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from pfaedle_spark.functions import geo
@@ -212,6 +212,14 @@ def test_srp_key_matmul_matches_scalar_reference(vecs):
             assert keys[n, b] == want, (n, b)
 
 
+# one 2,000-vertex raw polyline among short pairs: densify keeps every
+# raw vertex, so a fixed 32-pair chunk would pad 32 cubes to its length
+_SHORT_PAIRS = [
+    ([(x, 0.0), (x + 30.0, 20.0)], [(x, 1.0), (x + 25.0, 18.0)]) for x in range(40)
+]
+_LONG_PAIR = ([(float(i), float(i % 2)) for i in range(2000)], [(0.0, 0.0), (2000.0, 0.0)])
+
+
 @given(
     st.lists(
         st.tuples(
@@ -221,6 +229,7 @@ def test_srp_key_matmul_matches_scalar_reference(vecs):
         min_size=1, max_size=6,
     )
 )
+@example(_SHORT_PAIRS[:10] + [_LONG_PAIR] + _SHORT_PAIRS[10:])
 @settings(max_examples=40, deadline=None)
 def test_frechet_batch_wavefront_matches_scalar_dps(pairs):
     """The anti-diagonal wavefront batch DP must be BIT-identical to
@@ -238,3 +247,12 @@ def test_frechet_batch_wavefront_matches_scalar_dps(pairs):
     for i, (ax, ay, bx, by) in enumerate(paths):
         assert dfs[i] == geo.frechet_dist(ax, ay, bx, by)
         assert adfs[i] == geo.acc_frechet_dist(ax, ay, bx, by)
+    # every pair in exactly one chunk, each padded cube within the budget
+    for seg0 in (50.0, 25.0):
+        dens = geo._densified(paths, seg0)
+        chunks = list(geo._dp_chunks(dens))
+        assert [i for lo, hi in chunks for i in range(lo, hi)] == list(range(len(paths)))
+        for lo, hi in chunks:
+            p_max = max(len(t[0]) for t in dens[lo:hi])
+            q_max = max(len(t[2]) for t in dens[lo:hi])
+            assert hi - lo == 1 or (hi - lo) * p_max * q_max <= geo._DP_CELLS
